@@ -3620,7 +3620,7 @@ def q_cdc_pgoutput_stream_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ninth-plus-six tx ends in StreamAbort and must vanish. Decode =
     map-only parse with broadcast block-interval attribution +
     equi-join commit gating + anti-join abort discard
-    (sources/pgoutput.py decode_pgoutput_v2; grammar: public pgoutput
+    (sources/pgoutput.py decode_pgoutput; grammar: public pgoutput
     protocol v2 docs — beyond the reference, which speaks protocol 1).
     The oracle reproduces the committed row set from the parquet table
     alone, so fragment stitching, xid stripping, and abort semantics
@@ -3630,14 +3630,15 @@ def q_cdc_pgoutput_stream_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from deltaforge_spark.plans.lineage import pin, retain
     from deltaforge_spark.sources.pgoutput import (
-        decode_pgoutput_v2,
+        decode_pgoutput,
         synth_pgoutput_streamed,
     )
 
-    # pinned: the v2 decode references the stream several times (block
-    # attribution, commit gating, abort anti-join) — r13 optimization
+    # pinned: the streamed decode references the stream several times
+    # (block attribution, commit gating, abort anti-join) — r13
+    # optimization
     stream = pin(synth_pgoutput_streamed(spark, sf_dir))
-    dec = decode_pgoutput_v2(stream)
+    dec = decode_pgoutput(stream)
     img_schema = T.StructType(
         [
             T.StructField("o_orderkey", T.LongType()),
@@ -3669,9 +3670,9 @@ def q_cdc_pgoutput_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     implemented it): every third transaction travels PREPARED (b dml…
     P) with the decision arriving later as COMMIT PREPARED ('K');
     rolled-back ('r') and still-PENDING prepared transactions must
-    never emit. Decode = v1 interval path for plain txs + a gid-keyed
-    decision join for prepared ones (sources/pgoutput.py
-    decode_pgoutput_two_phase; grammar: public PG logical-replication
+    never emit. Decode = one interval join over plain B…C and
+    committed b…P intervals, the commit decided by a gid-keyed join
+    (sources/pgoutput.py decode_pgoutput; grammar: public PG logical-replication
     message docs). The oracle reproduces the committed row set from
     the parquet table alone, value-checking prepare framing, decision
     gating, and pending-exclusion."""
@@ -3680,14 +3681,14 @@ def q_cdc_pgoutput_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from deltaforge_spark.plans.lineage import pin, retain
     from deltaforge_spark.sources.pgoutput import (
-        decode_pgoutput_two_phase,
+        decode_pgoutput,
         synth_pgoutput_two_phase,
     )
 
     # pinned: the 2PC decode references the stream for DML, prepare
     # framing AND the gid decision join — r13 optimization
     stream = pin(synth_pgoutput_two_phase(spark, sf_dir))
-    dec = decode_pgoutput_two_phase(stream)
+    dec = decode_pgoutput(stream)
     img_schema = T.StructType(
         [
             T.StructField("o_orderkey", T.LongType()),

@@ -345,7 +345,6 @@ def main():
     )
     from deltaforge_spark.sources.pgoutput import (
         decode_pgoutput as _warm_pg_decode,
-        decode_pgoutput_two_phase as _warm_2pc_decode,
         synth_pgoutput_orders as _warm_pg_synth,
         synth_pgoutput_two_phase as _warm_2pc_synth,
     )
@@ -354,7 +353,7 @@ def main():
         _warm_decode(_warm_synth(spark, warm_dir), {("testdb", "events"): _WARM_COLS})
     )
     materialize(_warm_pg_decode(_warm_pg_synth(spark, warm_dir)))
-    materialize(_warm_2pc_decode(_warm_2pc_synth(spark, warm_dir)))
+    materialize(_warm_pg_decode(_warm_2pc_synth(spark, warm_dir)))
     print("warmup done", file=sys.stderr, flush=True)
 
     # Timed runs, keep the min + a per-query pass count: the container's
@@ -484,10 +483,7 @@ def main():
     # interval stamping — timed on a staged capture like its v1
     # sibling. Decode is seq-keyed (order-independent), so the
     # repartitioned layout is exactly what an archive reader produces.
-    from deltaforge_spark.sources.pgoutput import (
-        decode_pgoutput_two_phase,
-        synth_pgoutput_two_phase,
-    )
+    from deltaforge_spark.sources.pgoutput import synth_pgoutput_two_phase
 
     tp_path = f"/dev/shm/deltaforge-bench-data/pgoutput-2pc-p{par}-sf{sf}"
     if not _parquet_staged(tp_path):
@@ -495,9 +491,7 @@ def main():
             "overwrite"
         ).parquet(tp_path)
     tp = spark.read.parquet(tp_path)
-    timed_agreed(
-        "cdc_pgoutput_two_phase_staged", lambda: decode_pgoutput_two_phase(tp)
-    )
+    timed_agreed("cdc_pgoutput_two_phase_staged", lambda: decode_pgoutput(tp))
 
     # ---- TIER 1c: end-to-end delivery over the REAL Kafka wire
     # protocol — envelope + routing + transactional produce
@@ -737,6 +731,13 @@ def main():
     print(_gate_line(gate, timings))
 
 
+def _gate_agreed(entry) -> bool:
+    """The verdict of one ``gates_agreed`` entry (``[agreed, n, ...]``).
+    A malformed entry counts as not agreed instead of raising, so it
+    cannot take the final line down with it."""
+    return isinstance(entry, (list, tuple)) and bool(entry) and bool(entry[0])
+
+
 def _gate_line(gate: dict, timings: dict) -> str:
     """The FINAL stdout line — the one JSON object the driver parses
     (it keeps only the last ~2,000 chars of stdout).
@@ -755,9 +756,9 @@ def _gate_line(gate: dict, timings: dict) -> str:
             for k, v in gate["sf1"].items()
             if k != "check_all"  # the prose block — detail on the line above
         }
-    agreed = gate.pop("gates_agreed", {})
-    gate["gates_agreed_ok"] = all(v[0] for v in agreed.values())
-    gate["gates_agreed_n"] = [sum(1 for v in agreed.values() if v[0]), len(agreed)]
+    agreed = [_gate_agreed(v) for v in gate.pop("gates_agreed", {}).values()]
+    gate["gates_agreed_ok"] = all(agreed)
+    gate["gates_agreed_n"] = [sum(agreed), len(agreed)]
     gate["queries"] = {k: timings[k] for k in TREND_KERNELS if k in timings}
     line = json.dumps(gate)
     if len(line) > 1800:  # hard guard: never outgrow the driver tail again

@@ -225,8 +225,8 @@ def write_spool(path: str, messages: list[bytes]) -> None:
 
 class _PgoutputBatchReader(DataSourceReader):
     """Partitions per spool file; seq is globally ordered by
-    (sorted file, in-file index) so tx stamping downstream
-    (decode_pgoutput's interval join) sees capture order."""
+    (sorted file, in-file index) so tx stamping and stream-block
+    attribution downstream (decode_pgoutput) see capture order."""
 
     SEQ_STRIDE = 1 << 32  # per-file seq namespace: files hold < 4B msgs
 
@@ -284,9 +284,10 @@ class _PgoutputStreamReader(SimpleDataSourceStreamReader):
 
 class PgoutputSpoolDataSource(DataSource):
     """Raw pgoutput message spools as a Spark format: yields
-    (file, seq, data) rows that feed ``decode_pgoutput`` /
-    ``decode_pgoutput_messages`` unchanged — the source owns framing
-    and ordering, the decoder owns the grammar."""
+    (file, seq, data) rows that feed ``decode_pgoutput`` (plain,
+    streamed or two-phase captures alike) / ``decode_pgoutput_messages``
+    unchanged — the source owns framing and ordering, the decoder owns
+    the grammar."""
 
     @classmethod
     def name(cls) -> str:

@@ -953,7 +953,9 @@ def _block_intervals(
     )
 
 
-def _tag_prefilter(stream: DataFrame, data_col: str, tags: bytes) -> DataFrame:
+def _tag_prefilter(
+    stream: DataFrame, data_col: str, tags: bytes, *, keep_malformed: bool = False
+) -> DataFrame:
     """JVM-side first-byte prefilter for a control-plane scan — the r10
     DML-prefilter discipline (VERDICT r10 #2) extended to every
     tag-selective pass (VERDICT r13 #7: each pass re-shipped the WHOLE
@@ -967,29 +969,68 @@ def _tag_prefilter(stream: DataFrame, data_col: str, tags: bytes) -> DataFrame:
     ``substring`` comparison runs inside whole-stage codegen, so the
     transfer shrinks to the control rows themselves (a replication
     stream is ~2 control rows per transaction). The Python-side tag
-    check stays as the invariant guard, exactly like the DML pass."""
+    check stays as the invariant guard, exactly like the DML pass.
+
+    A frame whose payload is NULL or empty has no tag, so it fails the
+    test and is dropped: the standalone message
+    (:func:`decode_pgoutput_messages`) and truncate
+    (:func:`decode_pgoutput_truncates`) scans skip such frames. With
+    ``keep_malformed`` they pass instead — the control-plane pin keeps
+    them so :func:`decode_pgoutput`'s tag count can count them and
+    fail loudly."""
     hexes = ", ".join(f"X'{t:02X}'" for t in tags)
-    return stream.where(F.expr(f"substring(`{data_col}`, 1, 1) IN ({hexes})"))
+    head = f"substring(`{data_col}`, 1, 1)"
+    if keep_malformed:
+        head, hexes = f"coalesce({head}, X'')", hexes + ", X''"
+    return stream.where(F.expr(f"{head} IN ({hexes})"))
 
 
-def _control_plane_pin(
-    stream: DataFrame, data_col: str, seq_col: str, tags: bytes
-) -> DataFrame:
+#: every first-byte tag a control-plane pass of :func:`decode_pgoutput`
+#: reads: relation, B/C, S/E stream bounds, c/A stream commit/abort,
+#: b/P/K/r two-phase and p stream prepare
+_CONTROL_TAGS = b"RBCSEcAbPKrp"
+
+
+def _control_plane_pin(stream: DataFrame, data_col: str, seq_col: str) -> DataFrame:
     """Materialize the control rows ONCE and feed every control-plane
-    pass from the pinned subset (guide §1.2 — don't recompute: the
-    v2 decode ran up to SIX tag-selective passes, each re-scanning the
-    ENTIRE capture to keep ~2 control rows per transaction; at archive
-    scale that multiplies the dominant I/O term by the pass count).
-    The pin is control-plane-sized (#control rows, never #events), and
-    it is a PERSIST, not a checkpoint: it materializes inside the
-    first job that already scans it (no extra materialization job —
-    the eager-checkpoint form measured ~0.5 s/query of pure job
-    latency at sf0.1), and every later pass reads the cache. Caller
-    owns release (``release_pinned`` handles cached frames) — decode
-    entry points retain it on their result."""
-    ctrl = _tag_prefilter(stream, data_col, tags).select(seq_col, data_col)
+    pass from the pinned subset (guide §1.2 — don't recompute: a
+    streamed decode runs up to SIX tag-selective passes, each of which
+    would otherwise re-scan the ENTIRE capture to keep ~2 control rows
+    per transaction; at archive scale that multiplies the dominant I/O
+    term by the pass count). The pin is control-plane-sized (#control
+    rows plus malformed frames, never #events), and it is a PERSIST,
+    not a checkpoint: it materializes inside the first job that
+    already scans it (no extra materialization job — the
+    eager-checkpoint form measured ~0.5 s/query of pure job latency at
+    sf0.1), and every later pass reads the cache. Caller owns release
+    (``release_pinned`` handles cached frames) — the decoder retains it
+    on its result."""
+    ctrl = _tag_prefilter(
+        stream, data_col, _CONTROL_TAGS, keep_malformed=True
+    ).select(seq_col, data_col)
     ctrl.persist()
     return ctrl
+
+
+def _tag_counts(ctrl: DataFrame, data_col: str) -> dict[str, int]:
+    """First-byte tag histogram of the control pin — one JVM-only
+    aggregate (no Python worker), and the job that materializes the
+    pin. Raises :class:`PgoutputError` with the number of NULL or
+    empty payloads: a frame without a tag cannot be decoded, and
+    dropping it silently would lose whatever it carried."""
+    rows = (
+        ctrl.groupBy(F.substring(F.col(data_col), 1, 1).alias("_tag"))
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .collect()
+    )
+    counts = {
+        None if r["_tag"] is None else bytes(r["_tag"]).decode("latin-1"): r["_n"]
+        for r in rows
+    }
+    malformed = counts.pop(None, 0) + counts.pop("", 0)
+    if malformed:
+        raise PgoutputError(f"{malformed} frame(s) with a NULL or empty payload")
+    return counts
 
 
 def pgoutput_relation_catalog(
@@ -1476,7 +1517,7 @@ def pgoutput_stream_blocks(
     :func:`pgoutput_attribute_stream` instead — S…E boundaries are
     O(#streamed transactions × segments), data-proportional, and a
     100-TB capture would OOM the driver here
-    (:func:`decode_pgoutput_v2` picks automatically via
+    (:func:`decode_pgoutput` picks automatically via
     ``stream_block_collect_max``).
 
     Blocks never nest (protocol guarantee), so pairing is each 'S'
@@ -1594,51 +1635,58 @@ def pgoutput_stream_block_table(
     from ..plans.lineage import pin, release_local_checkpoint
 
     s_ranked, s_pin = _ranked_by_seq(bounds.filter(F.col("kind") == "S"))
-    s = s_ranked.select(
-        F.col("_rank"),
-        F.col("xid"),
-        F.col("seq").alias("start_seq"),
-        F.col("first_segment"),
-    )
-    e_ranked, e_pin = _ranked_by_seq(bounds.filter(F.col("kind") == "E"))
-    e = e_ranked.select(F.col("_rank"), F.col("seq").alias("end_seq"))
-    paired = s.join(e, "_rank", "full_outer")
-    nxt = s.select((F.col("_rank") - 1).alias("_rank"), F.col("start_seq").alias("_next_start"))
-    chk = (
-        paired.join(nxt, "_rank", "left")
-        .agg(
-            F.sum(F.when(F.col("start_seq").isNull(), 1).otherwise(0)).alias("e_no_s"),
-            F.sum(F.when(F.col("end_seq").isNull(), 1).otherwise(0)).alias("open_s"),
-            F.sum(
-                F.when(F.col("end_seq") <= F.col("start_seq"), 1).otherwise(0)
-            ).alias("inverted"),
-            F.sum(
-                F.when(F.col("_next_start") < F.col("end_seq"), 1).otherwise(0)
-            ).alias("interleaved"),
+    e_pin = None
+    try:
+        s = s_ranked.select(
+            F.col("_rank"),
+            F.col("xid"),
+            F.col("seq").alias("start_seq"),
+            F.col("first_segment"),
         )
-        .collect()[0]
-    )
-    if (chk["e_no_s"] or 0) > 0:
-        raise PgoutputError("stream stop without start (distributed pairing)")
-    if (chk["open_s"] or 0) > 1 or (chk["inverted"] or 0) > 0 or (
-        chk["interleaved"] or 0
-    ) > 0:
-        raise PgoutputError(
-            "stream block never closed before the next started "
-            "(distributed pairing)"
+        e_ranked, e_pin = _ranked_by_seq(bounds.filter(F.col("kind") == "E"))
+        e = e_ranked.select(F.col("_rank"), F.col("seq").alias("end_seq"))
+        paired = s.join(e, "_rank", "full_outer")
+        nxt = s.select(
+            (F.col("_rank") - 1).alias("_rank"), F.col("start_seq").alias("_next_start")
         )
-    out = pin(
-        paired.select(
-            "xid",
-            "start_seq",
-            F.coalesce(F.col("end_seq"), F.lit(OPEN_BLOCK_END_SEQ)).alias("end_seq"),
-            "first_segment",
-            F.col("end_seq").isNull().alias("truncated"),
+        chk = (
+            paired.join(nxt, "_rank", "left")
+            .agg(
+                F.sum(F.when(F.col("start_seq").isNull(), 1).otherwise(0)).alias("e_no_s"),
+                F.sum(F.when(F.col("end_seq").isNull(), 1).otherwise(0)).alias("open_s"),
+                F.sum(
+                    F.when(F.col("end_seq") <= F.col("start_seq"), 1).otherwise(0)
+                ).alias("inverted"),
+                F.sum(
+                    F.when(F.col("_next_start") < F.col("end_seq"), 1).otherwise(0)
+                ).alias("interleaved"),
+            )
+            .collect()[0]
         )
-    )
-    release_local_checkpoint(s_pin)
-    release_local_checkpoint(e_pin)
-    return out
+        if (chk["e_no_s"] or 0) > 0:
+            raise PgoutputError("stream stop without start (distributed pairing)")
+        if (chk["open_s"] or 0) > 1 or (chk["inverted"] or 0) > 0 or (
+            chk["interleaved"] or 0
+        ) > 0:
+            raise PgoutputError(
+                "stream block never closed before the next started "
+                "(distributed pairing)"
+            )
+        return pin(
+            paired.select(
+                "xid",
+                "start_seq",
+                F.coalesce(F.col("end_seq"), F.lit(OPEN_BLOCK_END_SEQ)).alias("end_seq"),
+                "first_segment",
+                F.col("end_seq").isNull().alias("truncated"),
+            )
+        )
+    finally:
+        # the rank pins back only the pairing above: released on the
+        # torn-capture raises too, not just on success
+        release_local_checkpoint(s_pin)
+        if e_pin is not None:
+            release_local_checkpoint(e_pin)
 
 
 def pgoutput_attribute_stream(
@@ -1772,11 +1820,11 @@ def pgoutput_stream_prepared_commits(
     ``two_phase``): a large prepared transaction travels as S…E
     fragments closed by Stream Prepare ('p', carrying xid AND gid)
     instead of StreamCommit; the decision arrives later as COMMIT
-    PREPARED ('K', gid). Output ``(xid, commit_seq, commit_ts_ms)`` —
-    the same shape as :func:`pgoutput_stream_tx_table`, so the v2
-    decoder treats a decided streamed-prepared tx exactly like a
-    streamed-committed one (rolled-back and pending ones simply never
-    appear, which gates their rows out)."""
+    PREPARED ('K', gid). Output ``(xid, commit_seq, commit_ts_ms,
+    gid)`` — the :func:`pgoutput_stream_tx_table` shape plus the gid,
+    so :func:`decode_pgoutput` treats a decided streamed-prepared tx
+    exactly like a streamed-committed one (rolled-back and pending
+    ones simply never appear, which gates their rows out)."""
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1809,44 +1857,7 @@ def pgoutput_stream_prepared_commits(
         ).alias("commit_ts_ms"),
     )
     return preps.join(commits, preps.gid == commits._kg, "inner").select(
-        "xid", "commit_seq", "commit_ts_ms"
-    )
-
-
-def _prepared_parts(
-    stream: DataFrame,
-    *,
-    data_col: str = "data",
-    seq_col: str = "seq",
-    mark_stream: bool = False,
-) -> DataFrame:
-    """Map-only extraction of two-phase control rows (b/P/K/r) —
-    #prepared-tx rows, never #event rows. ``mark_stream`` additionally
-    emits a marker row per 'S' (Stream Start) so a caller that must
-    PROVE the capture has no v2 blocks gets that fact from the same
-    single pass instead of paying a second scan."""
-    tags = (b"b", b"P", b"K", b"r") + ((b"S",) if mark_stream else ())
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for seq, data in zip(pdf[seq_col], pdf[data_col]):
-                b = bytes(data)
-                tag = b[:1]
-                if tag not in tags:
-                    continue
-                if tag == b"S":
-                    rows.append(("S", int(seq), None, None, None))
-                    continue
-                m = parse_message(b)
-                ts = m.get("commit_ts_us", m.get("prepare_ts_us"))
-                rows.append((tag.decode(), int(seq), m["xid"], m["gid"], ts))
-            yield pd.DataFrame(rows, columns=["kind", "seq", "xid", "gid", "ts_us"])
-
-    return (
-        _tag_prefilter(stream, data_col, b"".join(tags))
-        .select(seq_col, data_col)
-        .mapInPandas(scan, PREPARED_PART_SCHEMA)
+        "xid", "commit_seq", "commit_ts_ms", "gid"
     )
 
 
@@ -1869,16 +1880,31 @@ def pgoutput_prepared_tx_table(
     outcome_seq, commit_ts_ms)`` with outcome ``'commit'`` /
     ``'rollback'`` / null (still pending — the decision hasn't arrived
     in this capture). Order-free: Begin Prepare pairs with Prepare on
-    gid, the decision joins on gid too — #prepared-tx rows, never
-    #event rows. PG guarantees a gid is unique among in-flight
-    prepared transactions; a capture long enough to see gid REUSE
-    (commit then a new prepare under the same gid) must be split at a
-    decision boundary first."""
-    parts = _prepared_parts(stream, data_col=data_col, seq_col=seq_col)
-    return _prepared_table_from_parts(parts)
+    gid, the decision joins on gid too — one map-only extraction of
+    #prepared-tx rows, never #event rows. PG guarantees a gid is unique
+    among in-flight prepared transactions; a capture long enough to see
+    gid REUSE (commit then a new prepare under the same gid) must be
+    split at a decision boundary first."""
+    tags = (b"b", b"P", b"K", b"r")
 
+    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for seq, data in zip(pdf[seq_col], pdf[data_col]):
+                b = bytes(data)
+                tag = b[:1]
+                if tag not in tags:
+                    continue
+                m = parse_message(b)
+                ts = m.get("commit_ts_us", m.get("prepare_ts_us"))
+                rows.append((tag.decode(), int(seq), m["xid"], m["gid"], ts))
+            yield pd.DataFrame(rows, columns=["kind", "seq", "xid", "gid", "ts_us"])
 
-def _prepared_table_from_parts(parts: DataFrame) -> DataFrame:
+    parts = (
+        _tag_prefilter(stream, data_col, b"".join(tags))
+        .select(seq_col, data_col)
+        .mapInPandas(scan, PREPARED_PART_SCHEMA)
+    )
     begins = parts.filter(F.col("kind") == "b").select(
         "xid", "gid", F.col("seq").alias("begin_seq")
     )
@@ -1902,294 +1928,6 @@ def _prepared_table_from_parts(parts: DataFrame) -> DataFrame:
             "outcome", "outcome_seq", "commit_ts_ms",
         )
     )
-
-
-def decode_pgoutput_two_phase(
-    stream: DataFrame,
-    *,
-    data_col: str = "data",
-    seq_col: str = "seq",
-    tx_bucket_width: int = 256,
-) -> DataFrame:
-    """PG 15 ``two_phase`` pipeline: plain B…C transactions decode via
-    the v1 interval path; PREPARED transactions (b … P) emit only after
-    their COMMIT PREPARED ('K') arrives — the decision join is on gid —
-    and ROLLBACK PREPARED ('r') / still-pending transactions never
-    emit (emitting before the decision would un-prepare the 2PC
-    semantics downstream; a consumer wanting pre-decision visibility
-    reads :func:`pgoutput_prepared_tx_table` directly). Output is the
-    v1 schema + ``gid`` (null for plain transactions).
-
-    This entry point assumes NO protocol-v2 streaming: an S…E block's
-    DML is xid-prefixed and would silently mis-parse here, so any
-    Stream Start in the capture raises loudly with a pointer to
-    :func:`decode_pgoutput_v2` (which handles streamed AND
-    non-streamed two-phase shapes in one pass). The check rides the
-    same single control-row scan that builds the prepared table — no
-    extra pass over the data plane.
-
-    Retained storage: the DML decode feeds BOTH stamping branches
-    (plain B…C and committed prepared) — without a barrier each branch
-    re-ran the full Python message parse (two identical MapInPandas
-    subtrees in the plan). It is pinned once and, with the shared
-    control-plane pin (replacing the prepared-parts pin that
-    previously leaked one checkpoint per call), rides the result via
-    ``retain`` — callers release with ``release_retained`` once the
-    frame is consumed."""
-    from ..operators.rangejoin import interval_join
-    from ..plans.lineage import retain
-
-    # one pinned control-row subset feeds the prepared-parts scan, the
-    # relation catalog AND the B/C transaction table (was 3 more
-    # full-capture scans); parts derive lazily from the tiny pin, so
-    # their own pin is no longer needed
-    ctrl = _control_plane_pin(stream, data_col, seq_col, b"RBCbPKrS")
-    parts = _prepared_parts(ctrl, data_col=data_col, seq_col=seq_col, mark_stream=True)
-    kind_counts = {
-        r["kind"]: r["cnt"]
-        for r in parts.groupBy("kind").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    if kind_counts.get("S"):
-        from ..plans.lineage import release_pinned
-
-        release_pinned(ctrl)
-        raise PgoutputError(
-            "capture contains protocol-v2 stream blocks; "
-            "decode_pgoutput_two_phase would mis-parse xid-prefixed DML — "
-            "use decode_pgoutput_v2 (it handles streamed and non-streamed "
-            "two-phase transactions together)"
-        )
-    relations = pgoutput_relation_catalog(ctrl, data_col=data_col, seq_col=seq_col)
-    # persist, not checkpoint: both stamping branches resolve to one
-    # InMemoryRelation computed inside the final job (no extra job)
-    dml = decode_pgoutput_dml(
-        stream, relations, data_col=data_col, seq_col=seq_col
-    ).persist()
-    tx = pgoutput_tx_table(ctrl, data_col=data_col, seq_col=seq_col)
-    v1 = stamp_transactions(dml, tx, bucket_width=tx_bucket_width).withColumn(
-        "gid", F.lit(None).cast("string")
-    )
-    prepared = _prepared_table_from_parts(parts.filter(F.col("kind") != "S"))
-    committed = prepared.filter(F.col("outcome") == "commit").select(
-        "xid", "gid", "begin_seq", "prepare_seq", "commit_ts_ms"
-    )
-    one = F.lit(1)
-    stamped = interval_join(
-        dml.withColumn("_k", one),
-        committed.withColumn("_k", one),
-        by="_k",
-        point_col="seq",
-        start_col="begin_seq",
-        end_col="prepare_seq",
-        bucket_width=tx_bucket_width,
-        how="inner",
-    ).drop("_k", "begin_seq", "prepare_seq")
-    return retain(v1.unionByName(stamped), ctrl, dml)
-
-
-def decode_pgoutput_v2(
-    stream: DataFrame,
-    *,
-    data_col: str = "data",
-    seq_col: str = "seq",
-    tx_bucket_width: int = 256,
-    keep_uncommitted: bool = False,
-    stream_block_collect_max: int = 65536,
-    block_bucket_width: int = 4096,
-) -> DataFrame:
-    """Protocol-v2 full pipeline (PG 14+ ``streaming = on``), the ONE
-    entry point for a combined capture: the v1 path (catalog →
-    map-only DML decode → interval-join tx stamp) PLUS streamed
-    in-progress transactions stitched back together PLUS two-phase
-    transactions in BOTH their shapes —
-
-    - streamed txs: S…E block fragments attribute rows to their
-      toplevel xid, StreamCommit gates emission (equi-join on xid),
-      StreamAbort discards rolled-back subtransactions (anti-join on
-      msg_xid); a streamed-prepared tx ('p' + COMMIT PREPARED 'K')
-      gates through the same xid table.
-    - NON-streamed prepared txs (``two_phase`` on, small tx: b dml… P
-      with the 'K'/'r' decision later): their DML has no stream xid
-      and no B…C interval, so it stamps against the committed b…P
-      intervals from :func:`pgoutput_prepared_tx_table` — previously
-      these rows were silently inner-join-dropped (ADVICE r8).
-
-    Commit-gated like v1: a streamed tx with no StreamCommit, and a
-    prepared tx whose decision is rollback or missing, never emit.
-    Output schema matches :func:`decode_pgoutput` exactly so every
-    downstream consumer (change feed, envelope, sinks) is
-    format-agnostic about how the transaction traveled the wire.
-
-    Block attribution picks its shape by measured boundary count
-    (one counts-only job over the map-only S/E scan):
-
-    - ``≤ stream_block_collect_max`` boundaries (a micro-batch, a
-      bounded slice): collect + broadcast bisect — zero extra
-      data-plane shuffles, the right call for streaming mode where
-      the micro-batch bounds the block list;
-    - above it (archive replay — S…E boundaries are O(#streamed txs ×
-      segments), a 100-TB capture has millions): fully distributed —
-      rank-paired block table (:func:`pgoutput_stream_block_table`) +
-      bucketized interval-join attribution
-      (:func:`pgoutput_attribute_stream`). Costs one data-plane
-      shuffle; never builds a driver-side block list."""
-    from ..plans.lineage import release_pinned as _release_pinned
-    from ..plans.lineage import retain as _retain
-
-    # one pinned control-row subset feeds EVERY control-plane pass
-    # below (bounds, catalog, B/C table, prepared parts, stream
-    # commit/abort/prepared gates) — previously each pass re-scanned
-    # the full capture (guide §1.2: at archive scale the re-reads are
-    # the dominant I/O term). Rides the result via retain; released on
-    # the torn-capture raise paths.
-    ctrl = _control_plane_pin(stream, data_col, seq_col, b"RBCSEcAbPKrp")
-    bounds = pgoutput_stream_bounds(ctrl, data_col=data_col, seq_col=seq_col)
-    bounds.persist()
-    block_table = None
-    try:
-        n_bounds = bounds.count()
-        if n_bounds <= stream_block_collect_max:
-            # small-capture fast path: broadcast-bisect membership
-            blocks = _pair_bound_rows(
-                sorted((r.asDict() for r in bounds.collect()), key=lambda r: r["seq"])
-            )
-            # blocks FIRST: 'R' messages inside S…E blocks are
-            # xid-prefixed too (PG's maybe_send_schema runs in-stream) —
-            # without the intervals the xid bytes would be misread as
-            # the relation_id and the entry silently poisoned
-            relations = pgoutput_relation_catalog(
-                ctrl, data_col=data_col, seq_col=seq_col, stream_blocks=blocks
-            )
-            dml = decode_pgoutput_dml(
-                stream,
-                relations,
-                data_col=data_col,
-                seq_col=seq_col,
-                stream_blocks=blocks,
-            )
-        else:
-            block_table = pgoutput_stream_block_table(bounds)
-            astream = pgoutput_attribute_stream(
-                stream,
-                block_table,
-                data_col=data_col,
-                seq_col=seq_col,
-                bucket_width=block_bucket_width,
-            )
-            relations = pgoutput_relation_catalog(
-                astream, data_col=data_col, seq_col=seq_col, attr_col="_blk_xid"
-            )
-            dml = decode_pgoutput_dml(
-                astream,
-                relations,
-                data_col=data_col,
-                seq_col=seq_col,
-                attr_col="_blk_xid",
-            )
-    except BaseException:
-        _release_pinned(ctrl)
-        raise
-    finally:
-        bounds.unpersist()
-    # the DML decode (the one expensive Python parse of the capture)
-    # feeds BOTH the plain and the streamed branch below — persist it
-    # or each branch re-runs the full MapInPandas parse (two identical
-    # DML subtrees in the pre-r14 plan). A persist (not a checkpoint):
-    # both branches resolve to ONE InMemoryRelation computed inside
-    # the final job itself — no separate materialization job. Rides
-    # the result via retain, released by the caller.
-    dml = dml.persist()
-    plain = dml.filter(F.col("stream_xid").isNull()).drop("stream_xid", "msg_xid")
-    tx = pgoutput_tx_table(ctrl, data_col=data_col, seq_col=seq_col)
-    # non-streamed prepared txs: committed b…P intervals join exactly
-    # like B…C ones; rollback/pending intervals never enter the table
-    prepared = pgoutput_prepared_tx_table(ctrl, data_col=data_col, seq_col=seq_col)
-    committed_2p = prepared.filter(F.col("outcome") == "commit").select(
-        "xid",
-        F.col("begin_seq"),
-        F.col("prepare_seq").alias("commit_seq"),
-        "commit_ts_ms",
-    )
-    v1 = _stamp_plain(
-        plain,
-        tx,
-        committed_2p,
-        bucket_width=tx_bucket_width,
-        keep_uncommitted=keep_uncommitted,
-    )
-    sv = dml.filter(F.col("stream_xid").isNotNull())
-    # a streamed tx commits either directly (StreamCommit 'c') or, with
-    # two_phase on, via Stream Prepare ('p') + COMMIT PREPARED ('K') —
-    # both shapes land in the same (xid, commit_ts) gate table
-    commits = pgoutput_stream_tx_table(
-        ctrl, data_col=data_col, seq_col=seq_col
-    ).unionByName(
-        pgoutput_stream_prepared_commits(ctrl, data_col=data_col, seq_col=seq_col)
-    )
-    aborts = pgoutput_stream_aborts(ctrl, data_col=data_col, seq_col=seq_col)
-    streamed = (
-        sv.join(
-            commits.select(F.col("xid").alias("_cxid"), "commit_ts_ms"),
-            sv.stream_xid == F.col("_cxid"),
-            "inner",
-        )
-        .join(
-            aborts.select(F.col("subxid").alias("_axid")),
-            sv.msg_xid == F.col("_axid"),
-            "left_anti",
-        )
-        .select(
-            "seq", "lsn", "relation_id", "op", "schema", "table",
-            "before", "after", "n_bytes",
-            F.col("stream_xid").alias("xid"),
-            "commit_ts_ms",
-        )
-    )
-    out = v1.unionByName(streamed)
-    # distributed path: the pinned block table still backs the lazy
-    # DML persist — it rides the result too (previously it leaked one
-    # checkpoint per archive slice, tagged on nothing)
-    pins = [ctrl, dml] + ([block_table] if block_table is not None else [])
-    return _retain(out, *pins)
-
-
-def _stamp_plain(
-    dml: DataFrame,
-    tx: DataFrame,
-    committed_prepared: DataFrame,
-    *,
-    bucket_width: int,
-    keep_uncommitted: bool,
-) -> DataFrame:
-    """Stamp plain (non-streamed) DML against BOTH interval tables —
-    B…C transactions and committed b…P prepared ones (disjoint in seq
-    space: PG's reorder buffer emits each transaction's block
-    contiguously). With ``keep_uncommitted``, rows matching NEITHER
-    survive with null xid/commit_ts (anti-join on the unique seq), so
-    the quarantine contract of :func:`stamp_transactions` holds across
-    both shapes without double-emitting prepared rows."""
-    from ..operators.rangejoin import interval_join
-
-    one = F.lit(1)
-    both = tx.select("xid", "begin_seq", "commit_seq", "commit_ts_ms").unionByName(
-        committed_prepared.select("xid", "begin_seq", "commit_seq", "commit_ts_ms")
-    )
-    stamped = interval_join(
-        dml.withColumn("_k", one),
-        both.withColumn("_k", one),
-        by="_k",
-        point_col="seq",
-        start_col="begin_seq",
-        end_col="commit_seq",
-        bucket_width=bucket_width,
-        how="inner",
-    ).drop("_k", "begin_seq", "commit_seq")
-    if not keep_uncommitted:
-        return stamped
-    orphans = dml.join(stamped.select("seq"), "seq", "left_anti")
-    for c in ("xid", "commit_ts_ms"):
-        orphans = orphans.withColumn(c, F.lit(None).cast("long"))
-    return stamped.unionByName(orphans)
 
 
 MESSAGE_SCHEMA = T.StructType(
@@ -2361,25 +2099,162 @@ def decode_pgoutput(
     seq_col: str = "seq",
     tx_bucket_width: int = 256,
     keep_uncommitted: bool = False,
+    stream_block_collect_max: int = 65536,
+    block_bucket_width: int = 4096,
 ) -> DataFrame:
-    """Full pipeline: catalog collect → map-only DML decode → tx stamp.
+    """The one pgoutput decode: relation catalog → map-only DML decode
+    → interval-join tx stamp, for every shape a transaction can travel
+    the wire in —
 
-    The relation catalog and the B/C transaction table read from ONE
-    pinned control-row subset instead of two more full-capture scans
-    (guide §1.2); the pin rides the result via ``retain`` — release
-    with ``release_retained`` once consumed."""
-    from ..plans.lineage import retain
+    - plain B…C transactions (protocol 1);
+    - streamed in-progress transactions (protocol 2, PG 14+
+      ``streaming = on``): S…E block fragments attribute rows to their
+      toplevel xid, StreamCommit gates emission (equi-join on xid),
+      StreamAbort discards rolled-back subtransactions (anti-join on
+      msg_xid); a streamed-prepared tx ('p' + COMMIT PREPARED 'K')
+      gates through the same xid table;
+    - NON-streamed prepared transactions (PG 15 ``two_phase``, b dml…
+      P with the 'K'/'r' decision later): their DML has no stream xid
+      and no B…C interval, so it stamps against the committed b…P
+      intervals of :func:`pgoutput_prepared_tx_table`.
 
-    ctrl = _control_plane_pin(stream, data_col, seq_col, b"RBC")
-    relations = pgoutput_relation_catalog(ctrl, data_col=data_col, seq_col=seq_col)
-    dml = decode_pgoutput_dml(stream, relations, data_col=data_col, seq_col=seq_col)
-    tx = pgoutput_tx_table(ctrl, data_col=data_col, seq_col=seq_col)
-    return retain(
-        stamp_transactions(
-            dml, tx, bucket_width=tx_bucket_width, keep_uncommitted=keep_uncommitted
-        ),
-        ctrl,
+    Commit-gated: a streamed tx with no StreamCommit, and a prepared tx
+    whose decision is rollback or missing, never emit (emitting before
+    the decision would un-prepare the 2PC semantics downstream; a
+    consumer wanting pre-decision visibility reads
+    :func:`pgoutput_prepared_tx_table` directly). ``keep_uncommitted``
+    keeps non-streamed rows that no committed interval covers, with a
+    null xid / commit_ts (see :func:`stamp_transactions`). Output is
+    the DML columns + ``xid``, ``commit_ts_ms`` and ``gid`` (null
+    unless the row's transaction was prepared), whatever the shape.
+
+    One JVM-only aggregate over the control-plane pin counts the
+    first-byte tags, and the branches follow from the counts, so a
+    plain capture runs the plain plan:
+
+    - no S/E tags: no stream bounds, no block attribution, no streamed
+      commit/abort branch; the DML has one consumer, so it is neither
+      persisted nor widened with stream columns;
+    - no b/P/K/r tags: no prepared table;
+    - B…C ∪ committed b…P intervals stamp in ONE interval join
+      (disjoint in seq space: PG's reorder buffer emits each
+      transaction's block contiguously).
+
+    Block attribution picks its shape by the S+E boundary count:
+
+    - ``≤ stream_block_collect_max`` boundaries (a micro-batch, a
+      bounded slice): collect + broadcast bisect — zero extra
+      data-plane shuffles;
+    - above it (archive replay — S…E boundaries are O(#streamed txs ×
+      segments), a 100-TB capture has millions): fully distributed —
+      rank-paired block table (:func:`pgoutput_stream_block_table`) +
+      bucketized interval-join attribution
+      (:func:`pgoutput_attribute_stream`). Costs one data-plane
+      shuffle; never builds a driver-side block list.
+
+    Retained storage: the control pin, plus the persisted DML decode
+    and the block table when the capture streams, ride the result via
+    ``retain`` — release with ``release_retained`` once consumed. A
+    raise (torn capture, malformed frame) releases them first."""
+    from ..plans.lineage import release_pinned, retain
+
+    cols = {"data_col": data_col, "seq_col": seq_col}
+    ctrl = _control_plane_pin(stream, data_col, seq_col)
+    block_table = None
+    try:
+        tags = _tag_counts(ctrl, data_col)
+        n_bounds = tags.get("S", 0) + tags.get("E", 0)
+        if not n_bounds:
+            relations = pgoutput_relation_catalog(ctrl, **cols)
+            dml = decode_pgoutput_dml(stream, relations, **cols)
+        elif n_bounds <= stream_block_collect_max:
+            # small-capture fast path: broadcast-bisect membership
+            bounds = pgoutput_stream_bounds(ctrl, **cols).collect()
+            blocks = _pair_bound_rows(
+                sorted((r.asDict() for r in bounds), key=lambda r: r["seq"])
+            )
+            # blocks FIRST: 'R' messages inside S…E blocks are
+            # xid-prefixed too (PG's maybe_send_schema runs in-stream) —
+            # without the intervals the xid bytes would be misread as
+            # the relation_id and the entry silently poisoned
+            relations = pgoutput_relation_catalog(ctrl, **cols, stream_blocks=blocks)
+            dml = decode_pgoutput_dml(stream, relations, **cols, stream_blocks=blocks)
+        else:
+            bounds = pgoutput_stream_bounds(ctrl, **cols).persist()
+            try:
+                block_table = pgoutput_stream_block_table(bounds)
+            finally:
+                bounds.unpersist()
+            astream = pgoutput_attribute_stream(
+                stream, block_table, **cols, bucket_width=block_bucket_width
+            )
+            relations = pgoutput_relation_catalog(astream, **cols, attr_col="_blk_xid")
+            dml = decode_pgoutput_dml(astream, relations, **cols, attr_col="_blk_xid")
+    except BaseException:
+        release_pinned(ctrl)
+        if block_table is not None:
+            release_pinned(block_table)
+        raise
+    tx = pgoutput_tx_table(ctrl, **cols).withColumn("gid", F.lit(None).cast("string"))
+    if any(tags.get(t) for t in "bPKr"):
+        # committed b…P intervals join exactly like B…C ones;
+        # rollback/pending intervals never enter the table
+        prepared = pgoutput_prepared_tx_table(ctrl, **cols)
+        tx = tx.unionByName(
+            prepared.filter(F.col("outcome") == "commit").select(
+                "xid",
+                "begin_seq",
+                F.col("prepare_seq").alias("commit_seq"),
+                "commit_ts_ms",
+                "gid",
+            )
+        )
+    plain = dml
+    if n_bounds:
+        # the DML decode (the one expensive Python parse of the capture)
+        # feeds BOTH the plain and the streamed branch below — persist
+        # it or each branch re-runs the full MapInPandas parse. A
+        # persist (not a checkpoint): both branches resolve to ONE
+        # InMemoryRelation computed inside the final job itself — no
+        # separate materialization job.
+        dml = dml.persist()
+        plain = dml.filter(F.col("stream_xid").isNull()).drop("stream_xid", "msg_xid")
+    out = stamp_transactions(
+        plain, tx, bucket_width=tx_bucket_width, keep_uncommitted=keep_uncommitted
     )
+    if not n_bounds:
+        return retain(out, ctrl)
+    sv = dml.filter(F.col("stream_xid").isNotNull())
+    # a streamed tx commits either directly (StreamCommit 'c') or, with
+    # two_phase on, via Stream Prepare ('p') + COMMIT PREPARED ('K') —
+    # both shapes land in the same (xid, commit_ts, gid) gate table
+    commits = pgoutput_stream_tx_table(ctrl, **cols).unionByName(
+        pgoutput_stream_prepared_commits(ctrl, **cols), allowMissingColumns=True
+    )
+    aborts = pgoutput_stream_aborts(ctrl, **cols)
+    streamed = (
+        sv.join(
+            commits.select(F.col("xid").alias("_cxid"), "commit_ts_ms", "gid"),
+            sv.stream_xid == F.col("_cxid"),
+            "inner",
+        )
+        .join(
+            aborts.select(F.col("subxid").alias("_axid")),
+            sv.msg_xid == F.col("_axid"),
+            "left_anti",
+        )
+        .select(
+            "seq", "lsn", "relation_id", "op", "schema", "table",
+            "before", "after", "n_bytes",
+            F.col("stream_xid").alias("xid"),
+            "commit_ts_ms",
+            "gid",
+        )
+    )
+    # distributed path: the pinned block table still backs the lazy
+    # DML persist — it rides the result too
+    pins = [ctrl, dml] + ([block_table] if block_table is not None else [])
+    return retain(out.unionByName(streamed), *pins)
 
 
 def pgoutput_change_feed(
@@ -2396,7 +2271,8 @@ def pgoutput_change_feed(
     per-row source block (connector=postgresql, sequence=LSN), the
     stamped transaction id and its commit time as ts_ms — the
     reference's handle_insert/update/delete → Event::new_row flow
-    (postgres_event.rs:395-644)."""
+    (postgres_event.rs:395-644). Reads every capture shape
+    :func:`decode_pgoutput` reads: plain, streamed and two-phase."""
     from ..envelope import finish_envelope
     from ..plans.lineage import retain, retained_pins
 

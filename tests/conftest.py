@@ -5,6 +5,10 @@ import pytest
 from deltaforge_spark.session import get_spark
 
 
+def pytest_configure(config):
+    config.addinivalue_line("markers", "spark: the test needs a SparkSession")
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("tests", cpus=4)

@@ -219,6 +219,17 @@ class TestGateLineContract:
         assert parsed["gates_agreed_n"] == [8, 8]
         assert "check_all" not in parsed.get("sf1", {})
 
+    def test_malformed_agreement_entry_counts_as_not_agreed(self):
+        import json
+
+        b = _bench()
+        gate = self._realistic_gate()
+        gate["gates_agreed"]["cdc_gate_broken"] = []
+        gate["gates_agreed"]["cdc_gate_scalar"] = None
+        parsed = json.loads(b._gate_line(gate, {k: 1.0 for k in b.TREND_KERNELS}))
+        assert parsed["gates_agreed_ok"] is False
+        assert parsed["gates_agreed_n"] == [8, 10]
+
     def test_original_gate_not_mutated(self):
         b = _bench()
         gate = self._realistic_gate()

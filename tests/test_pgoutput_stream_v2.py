@@ -4,6 +4,8 @@ walreceiver's stream-state tagging, block pairing (loud on torn
 captures), and the distributed stitch — commit gating, multi-segment
 reassembly, and subtransaction abort discard."""
 
+import os
+
 import pytest
 
 from deltaforge_spark.sources.pgoutput import (
@@ -12,7 +14,7 @@ from deltaforge_spark.sources.pgoutput import (
     PgoutputError,
     ReplicationStream,
     decode_pgoutput_dml,
-    decode_pgoutput_v2,
+    decode_pgoutput,
     encode_commit,
     encode_begin,
     encode_insert,
@@ -32,6 +34,14 @@ from deltaforge_spark.sources.pgoutput import (
 
 REL = 77
 COLS = [("id", 20, -1, 1), ("name", 25, -1, 0)]
+
+
+def _storage(spark):
+    """(persistent RDD ids, files under the checkpoint dir)."""
+    sc = spark.sparkContext
+    root = sc.getCheckpointDir().replace("file:", "")
+    files = {os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs}
+    return set(sc._jsc.getPersistentRDDs().keys()), files
 
 
 class TestByteVectors:
@@ -180,7 +190,7 @@ class TestDistributedStitch:
             pgoutput_stream_blocks(dangling)
 
     def test_commit_gating_multiseg_stitch_and_abort_discard(self, spark):
-        dec = decode_pgoutput_v2(_base_stream(spark))
+        dec = decode_pgoutput(_base_stream(spark))
         got = sorted(
             (r["xid"], r["after"], r["commit_ts_ms"]) for r in dec.collect()
         )
@@ -191,6 +201,19 @@ class TestDistributedStitch:
             (10, '{"id": 2, "name": "b"}', 946684800000 + 5_000),
             (30, '{"id": 3, "name": "c"}', 946684800000 + 7_000),
         ]
+        # a capture that is one streamed block and nothing else
+        single = _df(
+            spark,
+            [
+                (0, encode_relation(REL, "public", "t", COLS)),
+                (1, encode_stream_start(10, first_segment=True)),
+                (2, encode_insert(REL, ["1", "a"], stream_xid=10)),
+                (3, encode_stream_stop()),
+                (4, encode_stream_commit(10, 0x100, 0x101, 5_000_000)),
+            ],
+        )
+        got = [(r["xid"], r["after"], r["commit_ts_ms"]) for r in decode_pgoutput(single).collect()]
+        assert got == [(10, '{"id": 1, "name": "a"}', 946684800000 + 5_000)]
 
     def test_subtransaction_abort_discards_only_subxid_rows(self, spark):
         rows = [
@@ -203,7 +226,7 @@ class TestDistributedStitch:
             (5, encode_stream_abort(10, 11)),  # subxact rolls back...
             (6, encode_stream_commit(10, 0x10, 0x11, 1_000_000)),  # ...tx commits
         ]
-        dec = decode_pgoutput_v2(_df(spark, rows))
+        dec = decode_pgoutput(_df(spark, rows))
         got = [(r["xid"], r["after"]) for r in dec.collect()]
         assert got == [(10, '{"id": 1, "name": "main"}')]
 
@@ -266,7 +289,7 @@ class TestInStreamRelation:
         assert poisoned
 
     def test_v2_pipeline_decodes_rows_announced_in_stream(self, spark):
-        dec = decode_pgoutput_v2(self._stream(spark))
+        dec = decode_pgoutput(self._stream(spark))
         got = sorted((r["xid"], r["after"]) for r in dec.collect())
         assert got == [
             (10, '{"id": 1, "name": "a"}'),
@@ -310,7 +333,7 @@ class TestTrailingOpenBlock:
         assert blk["end_seq"] == OPEN_BLOCK_END_SEQ
         # the truncated block's rows parse in streamed form but the
         # missing StreamCommit gates them out — nothing emits
-        dec = decode_pgoutput_v2(_df(spark, rows))
+        dec = decode_pgoutput(_df(spark, rows))
         assert dec.count() == 0
 
     def test_closed_blocks_have_no_truncated_flag(self, spark):
@@ -396,16 +419,30 @@ class TestDistributedPathParity:
 
     @pytest.mark.parametrize("collect_max", [65536, 0], ids=["fast", "distributed"])
     def test_combined_capture_decodes_every_shape(self, spark, collect_max):
-        dec = decode_pgoutput_v2(
+        dec = decode_pgoutput(
             _combined_capture(spark), stream_block_collect_max=collect_max
         )
         got = sorted((r["xid"], r["after"], r["commit_ts_ms"]) for r in dec.collect())
         assert got == COMBINED_EXPECT
 
+    def test_change_feed_reads_every_shape(self, spark):
+        from pyspark.sql import types as T
+
+        from deltaforge_spark.plans.lineage import release_retained
+        from deltaforge_spark.sources.pgoutput import pgoutput_change_feed
+
+        image = T.StructType(
+            [T.StructField("id", T.LongType()), T.StructField("name", T.StringType())]
+        )
+        feed = pgoutput_change_feed(_combined_capture(spark), image)
+        got = sorted((r["transaction"]["id"], r["after"]["id"]) for r in feed.collect())
+        release_retained(feed)
+        assert got == [("10", 1), ("10", 2), ("30", 3), ("40", 4), ("60", 6)]
+
     def test_fast_and_distributed_agree_row_for_row(self, spark):
         s = _combined_capture(spark)
-        fast = decode_pgoutput_v2(s, stream_block_collect_max=65536)
-        dist = decode_pgoutput_v2(s, stream_block_collect_max=0)
+        fast = decode_pgoutput(s, stream_block_collect_max=65536)
+        dist = decode_pgoutput(s, stream_block_collect_max=0)
         assert fast.columns == dist.columns
         key = lambda r: tuple(r)
         assert sorted(map(key, fast.collect())) == sorted(map(key, dist.collect()))
@@ -456,8 +493,8 @@ class TestDistributedPathParity:
                 add(encode_prepare(seq, seq + 1, 1_000_000 * i, xid, gid))
                 add(encode_commit_prepared(seq, seq + 1, 1_000_000 * i + 7, xid, gid))
         s = _df(spark, rows).repartition(8)
-        fast = decode_pgoutput_v2(s, stream_block_collect_max=1 << 30)
-        dist = decode_pgoutput_v2(s, stream_block_collect_max=0)
+        fast = decode_pgoutput(s, stream_block_collect_max=1 << 30)
+        dist = decode_pgoutput(s, stream_block_collect_max=0)
         kf = sorted(tuple(r) for r in fast.collect())
         kd = sorted(tuple(r) for r in dist.collect())
         assert kf == kd and len(kf) > 100
@@ -473,13 +510,30 @@ class TestDistributedPathParity:
                 (3, encode_stream_stop()),
             ],
         )
-        with pytest.raises(PgoutputError):
-            decode_pgoutput_v2(torn, stream_block_collect_max=collect_max).collect()
         dangling = _df(spark, [(0, encode_stream_stop())])
-        with pytest.raises(PgoutputError):
-            decode_pgoutput_v2(
-                dangling, stream_block_collect_max=collect_max
-            ).collect()
+        # the raise must not leak the control pin, the bounds cache, the
+        # rank pins or the block table
+        spark.catalog.clearCache()
+        rdds, files = _storage(spark)
+        for capture in (torn, dangling):
+            with pytest.raises(PgoutputError):
+                decode_pgoutput(capture, stream_block_collect_max=collect_max).collect()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        rdds_after, files_after = _storage(spark)
+        assert rdds_after - rdds == set()
+        assert files_after - files == set()
+
+    def test_null_and_empty_frames_are_counted(self, spark):
+        rows = [
+            (0, encode_relation(REL, "public", "t", COLS)),
+            (1, encode_begin(0x14, 1_000_000, 5)),
+            (2, None),
+            (3, b""),
+            (4, encode_insert(REL, ["1", "a"])),
+            (5, encode_commit(0x14, 0x15, 1_000_000)),
+        ]
+        with pytest.raises(PgoutputError, match="2 frame"):
+            decode_pgoutput(_df(spark, rows))
 
     @pytest.mark.parametrize("collect_max", [65536, 0], ids=["fast", "distributed"])
     def test_truncated_trailing_block_gates_out(self, spark, collect_max):
@@ -492,7 +546,7 @@ class TestDistributedPathParity:
             (5, encode_insert(REL, ["2", "cut"], stream_xid=10)),
             # capture ends mid-block: no E, no StreamCommit
         ]
-        dec = decode_pgoutput_v2(_df(spark, rows), stream_block_collect_max=collect_max)
+        dec = decode_pgoutput(_df(spark, rows), stream_block_collect_max=collect_max)
         got = [(r["xid"], r["after"]) for r in dec.collect()]
         # the committed v1 row survives; the truncated block's row is
         # commit-gated out (graceful degrade, not an error)
@@ -517,26 +571,10 @@ class TestDistributedPathParity:
 
 
 class TestTwoPhaseStreamGuard:
-    def test_two_phase_decode_refuses_v2_stream_blocks(self, spark):
-        """decode_pgoutput_two_phase would mis-parse xid-prefixed DML in
-        S…E blocks — it must refuse loudly and point to the v2 entry
-        (ADVICE r8 medium, landed r9; pinned here)."""
-        from deltaforge_spark.sources.pgoutput import decode_pgoutput_two_phase
-
-        rows = [
-            (0, encode_relation(REL, "public", "t", COLS)),
-            (1, encode_stream_start(10, first_segment=True)),
-            (2, encode_insert(REL, ["1", "a"], stream_xid=10)),
-            (3, encode_stream_stop()),
-            (4, encode_stream_commit(10, 0x100, 0x101, 5_000_000)),
-        ]
-        with pytest.raises(PgoutputError, match="decode_pgoutput_v2"):
-            decode_pgoutput_two_phase(_df(spark, rows))
-
     @pytest.mark.parametrize("collect_max", [65536, 0], ids=["fast", "distributed"])
     def test_plain_prepared_tx_emits_through_v2(self, spark, collect_max):
         """A committed NON-streamed prepared tx (b dml P … K) must emit
-        through decode_pgoutput_v2's plain path — ADVICE r8: these rows
+        through decode_pgoutput's plain path — ADVICE r8: these rows
         were silently inner-join-dropped before r9."""
         from deltaforge_spark.sources.pgoutput import (
             encode_begin_prepare,
@@ -556,7 +594,7 @@ class TestTwoPhaseStreamGuard:
             (7, encode_commit_prepared(0x20, 0x22, 11_000_000, 40, "g40")),
             (8, encode_rollback_prepared(0x30, 0x32, 9_000_000, 9_500_000, 50, "g50")),
         ]
-        dec = decode_pgoutput_v2(_df(spark, rows), stream_block_collect_max=collect_max)
+        dec = decode_pgoutput(_df(spark, rows), stream_block_collect_max=collect_max)
         got = sorted((r["xid"], r["after"], r["commit_ts_ms"]) for r in dec.collect())
         assert got == [(40, '{"id": 4, "name": "d"}', 946684800000 + 11_000)]
 
@@ -579,7 +617,7 @@ class TestVersionedCatalogResolution:
             (5, encode_insert(REL, ["2", "b"])),
             (6, encode_commit(9, 10, 2_000_000)),
         ]
-        dec = decode_pgoutput_v2(_df(spark, rows))
+        dec = decode_pgoutput(_df(spark, rows))
         got = sorted((r["xid"], r["after"]) for r in dec.collect())
         assert got == [(31, '{"id": 2, "name": "b"}')]
 
@@ -596,7 +634,7 @@ class TestVersionedCatalogResolution:
             (6, encode_insert(REL, ["2", "b"])),
             (7, encode_commit(9, 10, 2_000_000)),
         ]
-        dec = decode_pgoutput_v2(_df(spark, rows))
+        dec = decode_pgoutput(_df(spark, rows))
         got = sorted((r["xid"], r["after"]) for r in dec.collect())
         assert got == [
             (30, '{"id": 1, "name": "a"}'),
@@ -611,7 +649,7 @@ class TestVersionedCatalogResolution:
             (3, encode_insert(9999, ["2", "b"])),  # never announced
             (4, encode_commit(5, 6, 1_000_000)),
         ]
-        dec = decode_pgoutput_v2(_df(spark, rows))
+        dec = decode_pgoutput(_df(spark, rows))
         assert [r["after"] for r in dec.collect()] == ['{"id": 1, "name": "a"}']
 
 

@@ -7,7 +7,7 @@ import pytest
 
 from deltaforge_spark.sources.pgoutput import (
     PgoutputError,
-    decode_pgoutput_two_phase,
+    decode_pgoutput,
     encode_begin,
     encode_begin_prepare,
     encode_commit,
@@ -129,9 +129,8 @@ class TestPreparedAssembly:
     def test_streamed_two_phase_gates_on_commit_prepared(self, spark):
         """PG 15 streaming + two_phase combined: S…E fragments closed by
         Stream Prepare ('p'), decided by 'K'/'r' — rows emit only for
-        the committed gid, through decode_pgoutput_v2's streamed path."""
+        the committed gid, through decode_pgoutput's streamed path."""
         from deltaforge_spark.sources.pgoutput import (
-            decode_pgoutput_v2,
             encode_stream_abort,
             encode_stream_prepare,
             encode_stream_start,
@@ -154,13 +153,15 @@ class TestPreparedAssembly:
             (9, encode_commit_prepared(0x10, 0x12, 5_000_000, 10, "sg10")),
             (10, encode_rollback_prepared(0x20, 0x22, 2_000_000, 2_100_000, 20, "sg20")),
         ]
-        dec = decode_pgoutput_v2(_df(spark, rows))
-        got = sorted((r["xid"], r["after"], r["commit_ts_ms"]) for r in dec.collect())
-        assert got == [(10, '{"id": 1, "name": "a"}', 946684800000 + 5_000)]
+        dec = decode_pgoutput(_df(spark, rows))
+        got = sorted(
+            (r["xid"], r["gid"], r["after"], r["commit_ts_ms"]) for r in dec.collect()
+        )
+        assert got == [(10, "sg10", '{"id": 1, "name": "a"}', 946684800000 + 5_000)]
         assert encode_stream_abort is not None
 
     def test_decode_gates_on_commit_prepared(self, spark):
-        dec = decode_pgoutput_two_phase(_capture(spark))
+        dec = decode_pgoutput(_capture(spark))
         got = sorted((r["xid"], r["gid"], r["after"], r["commit_ts_ms"]) for r in dec.collect())
         # g10 emits with the COMMIT PREPARED timestamp; g20 (rolled
         # back) and g30 (pending) never emit; xid 40 rides the v1 path

@@ -148,7 +148,7 @@ def _pgoutput_stream_decode_staged(spark, sf_dir, *, collect_max: int):
     import os as _os
 
     from deltaforge_spark.sources.pgoutput import (
-        decode_pgoutput_v2,
+        decode_pgoutput,
         synth_pgoutput_streamed,
     )
 
@@ -160,7 +160,7 @@ def _pgoutput_stream_decode_staged(spark, sf_dir, *, collect_max: int):
             "overwrite"
         ).parquet(path)
     wal = spark.read.parquet(path)
-    return decode_pgoutput_v2(wal, stream_block_collect_max=collect_max)
+    return decode_pgoutput(wal, stream_block_collect_max=collect_max)
 
 
 def _pgoutput_v2_decode_fast(spark, sf_dir):
@@ -176,7 +176,7 @@ def _pgoutput_two_phase_decode_staged(spark, sf_dir):
     import os as _os
 
     from deltaforge_spark.sources.pgoutput import (
-        decode_pgoutput_two_phase,
+        decode_pgoutput,
         synth_pgoutput_two_phase,
     )
 
@@ -187,7 +187,7 @@ def _pgoutput_two_phase_decode_staged(spark, sf_dir):
         synth_pgoutput_two_phase(spark, sf_dir).repartition(par).write.mode(
             "overwrite"
         ).parquet(path)
-    return decode_pgoutput_two_phase(spark.read.parquet(path))
+    return decode_pgoutput(spark.read.parquet(path))
 
 
 #: pair-emitting kernels whose raw wall ratio is output-dominated on
